@@ -63,7 +63,7 @@ object ProfileLsh {
     val nCand = pairs.count()
     def estimate(sorted: Boolean): DataFrame = {
       // the same size-aware broadcast decision the shipped operator makes
-      // (candidatePairsUnsorted) — a plain join here would profile a
+      // (candidatePairs) — a plain join here would profile a
       // shuffle shape the key never runs once the payload fits the
       // heap-derived budget (found in r14: the hand-rolled stage read
       // 130 s at sf10 while the real path ran 16 s)
@@ -85,7 +85,8 @@ object ProfileLsh {
     val tEstSorted = timed(reps)(estimate(sorted = true))
     val nOut = estimate(sorted = false).count()
     val tFull = timed(reps)(
-      MinHashLsh.candidatePairs(docs, k, bands, threshold, maxBucket))
+      MinHashLsh.candidatePairs(docs, k, bands, threshold, maxBucket)
+        .localCheckpoint(false).orderBy("doc_a", "doc_b"))
 
     val nDocs = docs.count()
     println(f"""{"profile":"dd_minhash_lsh","sf":"$sfDir","docs":$nDocs,""" +

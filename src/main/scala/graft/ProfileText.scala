@@ -80,7 +80,8 @@ object ProfileText {
     val mhCand = MinHashLsh.bandedPairs(sigs, k, bands, maxBucket).count()
     val mhOut = MinHashLsh.candidatePairs(docs, k, bands, 0.95, maxBucket).count()
     val mhFull = timed(reps)(
-      MinHashLsh.candidatePairs(docs, k, bands, 0.95, maxBucket))
+      MinHashLsh.candidatePairs(docs, k, bands, 0.95, maxBucket)
+        .localCheckpoint(false).orderBy("doc_a", "doc_b"))
 
     // --- dd_simhash: pigeonhole-blocked candidates → Hamming verify ---
     // the candidate stage is the key's own internals (blockKeys +

@@ -91,50 +91,49 @@ object SparkEntry {
     // --- time-series ETL (SURVEY §2: ts_*) ---
     "ts_clean" -> ((s, dir) => TimeSeries.clean(TimeSeries.base(s, dir))),
     "ts_interpolate" -> ((s, dir) => TimeSeries.interpolate(TimeSeries.base(s, dir))),
-    "ts_rolling" -> ((s, dir) => TimeSeries.rollingFeatures(TimeSeries.base(s, dir))),
+    "ts_rolling" -> ((s, dir) => TimeSeries.rollingFeatures(TimeSeries.base(s, dir))
+      .orderBy("user_id", "ts_us", "event_id")),
     "ts_lag_delta" -> ((s, dir) => TimeSeries.lagDelta(TimeSeries.base(s, dir))),
     "ts_resample" -> ((s, dir) => TimeSeries.resampleHourly(TimeSeries.base(s, dir))),
     "ts_sessionize" -> ((s, dir) => TimeSeries.sessionize(TimeSeries.base(s, dir))),
     // --- anomaly detection (SURVEY §2: ad_*) ---
     "ad_threshold" -> ((s, dir) =>
-      AnomalyRules.thresholdAlerts(TimeSeries.rollingFeatures(TimeSeries.base(s, dir)))),
-    "ad_consecutive" -> ((s, dir) => AnomalyRules.consecutiveRuns(TimeSeries.base(s, dir))),
-    "ad_oscillation" -> ((s, dir) => AnomalyRules.oscillation(TimeSeries.base(s, dir))),
-    "ad_zscore" -> ((s, dir) => AnomalyRules.zscoreAlerts(TimeSeries.base(s, dir))),
+      AnomalyRules.thresholdAlerts(TimeSeries.rollingFeatures(TimeSeries.base(s, dir)))
+        .orderBy("user_id", "ts_us", "event_id")),
+    "ad_consecutive" -> ((s, dir) => AnomalyRules.consecutiveRuns(TimeSeries.base(s, dir))
+      .orderBy("user_id", "ts_us", "event_id")),
+    "ad_oscillation" -> ((s, dir) => AnomalyRules.oscillation(TimeSeries.base(s, dir))
+      .orderBy("user_id", "ts_us", "event_id")),
+    "ad_zscore" -> ((s, dir) => AnomalyRules.zscoreAlerts(TimeSeries.base(s, dir))
+      .orderBy("user_id", "ts_us", "event_id")),
     // --- alert store / query surface (SURVEY §2: al_*) ---
-    // r21: every al_* consumer that AGGREGATES or TakeOrdereds the alert
-    // stream composes the UNSORTED rule cores — the sorted public forms
-    // fed a rangepartitioning exchange + global sort that the consumer's
-    // aggregate/TakeOrderedAndProject immediately destroyed, and
-    // EliminateSorts does not remove an ordered EXCHANGE under an
-    // aggregate (plan diff: al_summary 4 → 3 exchanges, the range
-    // exchange+sort gone; same rows — counts and top-k are
-    // order-insensitive, oracle-gated). ad_threshold keeps the sorted
-    // form: its OUTPUT is the presentation-ordered alert stream.
+    // the al_* consumers aggregate or TakeOrdered the unsorted alert
+    // stream; a presentation sort under them would cost a
+    // rangepartitioning exchange that EliminateSorts does not remove
     "al_filter" -> ((s, dir) =>
       Alerts.filterAlerts(
-        AnomalyRules.thresholdAlertsUnsorted(
-          TimeSeries.rollingFeaturesUnsorted(TimeSeries.base(s, dir))),
+        AnomalyRules.thresholdAlerts(
+          TimeSeries.rollingFeatures(TimeSeries.base(s, dir))),
         1704844800000000L, 1705708800000000L, "high", 100)),
     "al_summary" -> ((s, dir) =>
       Alerts.summary(
-        AnomalyRules.thresholdAlertsUnsorted(
-          TimeSeries.rollingFeaturesUnsorted(TimeSeries.base(s, dir))))),
+        AnomalyRules.thresholdAlerts(
+          TimeSeries.rollingFeatures(TimeSeries.base(s, dir))))),
     "al_daily" -> ((s, dir) =>
       Alerts.daily(
-        AnomalyRules.thresholdAlertsUnsorted(
-          TimeSeries.rollingFeaturesUnsorted(TimeSeries.base(s, dir))))),
+        AnomalyRules.thresholdAlerts(
+          TimeSeries.rollingFeatures(TimeSeries.base(s, dir))))),
     "al_filter_rule" -> ((s, dir) => {
       val events = TimeSeries.base(s, dir)
       Alerts.filterAlerts(
-        Pipeline.detectAll(events, TimeSeries.rollingFeaturesUnsorted(events)),
+        Pipeline.detectAll(events, TimeSeries.rollingFeatures(events)),
         startUs = Some(1704844800000000L), endUs = Some(1705708800000000L),
         ruleName = Some("zscore"), limit = 1000)
     }),
     "al_summary_range" -> ((s, dir) =>
       Alerts.summary(
-        AnomalyRules.thresholdAlertsUnsorted(
-          TimeSeries.rollingFeaturesUnsorted(TimeSeries.base(s, dir))),
+        AnomalyRules.thresholdAlerts(
+          TimeSeries.rollingFeatures(TimeSeries.base(s, dir))),
         1704844800000000L, 1705708800000000L)),
     // detectAllShared: ONE materialized events pass feeds all four rules
     // (the exchanges stay per-rule — r7 audit — but the scan is shared)
@@ -145,14 +144,13 @@ object SparkEntry {
     // the feature frame feeds BOTH join sides (the alert derivation and
     // the overlay) — materialize it once so the rolling window computes
     // one pass, not one per side (r20; the IsolationForest.scoreAll
-    // pattern). UNSORTED: the join re-shuffles both sides anyway and the
-    // key's own orderBy supplies the presentation order.
+    // pattern); the key's own orderBy supplies the presentation order
     "al_join_features" -> ((s, dir) => {
       // LAZY: the broadcast build of the alerts side is the first action
       // and materializes the feature blocks; the probe side reads them
-      val features = TimeSeries.rollingFeaturesUnsorted(TimeSeries.base(s, dir))
+      val features = TimeSeries.rollingFeatures(TimeSeries.base(s, dir))
         .localCheckpoint(false)
-      Alerts.joinFeatures(AnomalyRules.thresholdAlertsUnsorted(features), features)
+      Alerts.joinFeatures(AnomalyRules.thresholdAlerts(features), features)
     }),
     // --- dedup / similarity / text / multimodal (SURVEY §2: dd_/sim_/tx_/mm_) ---
     // NOTE: dd_ngram_jaccard / dd_embedding_exact (the deliberately-
@@ -210,16 +208,16 @@ object SparkEntry {
     "mm_frames" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       Multimodal.frameSample(
-        Multimodal.binaryColumnsUnsorted(Tables.documents(s, dir))).toDF()
+        Multimodal.binaryColumns(Tables.documents(s, dir))).toDF()
         .orderBy("doc_id", "frame_no")
     }),
     // cross-document repeated frames: only digests shuffle, never payloads
     "mm_frame_dedup" -> ((s, dir) =>
-      Multimodal.frameDedup(Multimodal.binaryColumnsUnsorted(Tables.documents(s, dir)))),
+      Multimodal.frameDedup(Multimodal.binaryColumns(Tables.documents(s, dir)))),
     // resize = adjacent-bin re-aggregation of the count histogram
     "mm_resize" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val mm = Multimodal.binaryColumnsUnsorted(Tables.documents(s, dir))
+      val mm = Multimodal.binaryColumns(Tables.documents(s, dir))
       // raw integer bin counts straight from the decode batch — exact at
       // any document size (no float round-trip)
       val counts = Multimodal.extractFeatures(mm, 16).toDF()
@@ -326,7 +324,7 @@ object SparkEntry {
     // them exactly from the payload bytes at any document size
     "mm_features" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      val mm = Multimodal.binaryColumnsUnsorted(Tables.documents(s, dir))
+      val mm = Multimodal.binaryColumns(Tables.documents(s, dir))
       Multimodal.extractFeatures(mm, 16).toDF()
         .select(col("doc_id"), col("n_bytes"),
           md5(concat_ws(",", transform(col("counts"), c => c.cast("string")))
@@ -335,8 +333,12 @@ object SparkEntry {
     }),
     // --- scale-path approximate ops + forest + streaming (rows-only
     //     except st_window_agg; cross-checked behaviorally in specs) ---
+    // a LAZY localCheckpoint before each presentation sort: the range
+    // sampler's pass materializes the 24-byte survivor rows once and the
+    // sort re-reads them, instead of re-running the join lineage
     "dd_minhash_lsh" -> ((s, dir) =>
-      MinHashLsh.candidatePairs(Tables.documents(s, dir), threshold = 0.95)),
+      MinHashLsh.candidatePairs(Tables.documents(s, dir), threshold = 0.95)
+        .localCheckpoint(false).orderBy("doc_a", "doc_b")),
     // the hub-star guard EXERCISED against the oracle (r15 ask #4):
     // maxBucket = 64 is under this corpus's real bucket sizes (up to
     // ~104 at sf0.01, ~1015 at sf0.1), so oversized buckets degrade to
@@ -344,7 +346,7 @@ object SparkEntry {
     // the hub semantics (bucket-minimum star, union, distinct) exactly
     "dd_minhash_lsh_hub" -> ((s, dir) =>
       MinHashLsh.candidatePairs(Tables.documents(s, dir), threshold = 0.95,
-        maxBucket = 64)),
+        maxBucket = 64).localCheckpoint(false).orderBy("doc_a", "doc_b")),
     "dd_simhash" -> ((s, dir) => SimHash.nearDupPairs(Tables.documents(s, dir))),
     "sim_ann_lsh" -> ((s, dir) => AnnLsh.topK(Tables.embeddings(s, dir), 0L, 10)),
     // unfiltered scoring surface: deterministic row set (one per rolling-
@@ -408,7 +410,10 @@ object SparkEntry {
       AnnLsh.topKBatch(Tables.embeddings(s, dir), (0L until 64L), k = 5)),
     "sim_ivf_batch" -> ((s, dir) =>
       Ivf.topKBatch(Tables.embeddings(s, dir),
-        ivfIndexFor(s, dir).centroids, (0L until 64L), k = 5)),
+        ivfIndexFor(s, dir).centroids, (0L until 64L), k = 5)
+        .orderBy(org.apache.spark.sql.functions.col("q_id"),
+          org.apache.spark.sql.functions.col("cosine").desc,
+          org.apache.spark.sql.functions.col("vec_id"))),
     // the measured recall floor as a query key: default constant-row
     // probe, per-query wide escalation where the answer measured as
     // background (AdaptiveAnn). Probe membership depends on the

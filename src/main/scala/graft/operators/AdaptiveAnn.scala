@@ -222,13 +222,10 @@ object AdaptiveAnn {
   def ivfTopKBatchAuto(embeddings: DataFrame, centroids: Array[Array[Float]],
       queryIds: Seq[Long], k: Int, corpusSize: Long = 0L): DataFrame = {
     val (mu, sigma) = backgroundStats(embeddings, corpusSize)
-    // unsorted internal probes: adaptive() collects phase 1 and sorts
-    // the final union itself, so each probe's presentation sort was a
-    // wasted range exchange (r20)
     adaptive(embeddings.sparkSession, queryIds, k, mu, sigma,
-      Ivf.topKBatchUnsorted(embeddings, centroids, queryIds, k,
+      Ivf.topKBatch(embeddings, centroids, queryIds, k,
         nprobe = Ivf.budgetNprobe(centroids.length)),
-      esc => Ivf.topKBatchUnsorted(embeddings, centroids, esc, k,
+      esc => Ivf.topKBatch(embeddings, centroids, esc, k,
         nprobe = Ivf.wideNprobe(centroids.length)))
   }
 }

@@ -29,23 +29,17 @@ object AnomalyRules {
   private def keyOrder: WindowSpec =
     Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
 
-  // Each rule exposes a sorted public form (the presentation ordering
-  // its own query key ships) and an Unsorted core for COMPOSITION:
-  // Pipeline.detectAll unions the cores, because a per-branch global
-  // sort under a union is pure waste — Catalyst's EliminateSorts
-  // removes a sort directly under an aggregate, but NOT sorts buried
-  // inside union branches, so the composed al_summary_* keys were
-  // paying four rangepartitioning exchanges whose order the aggregate
-  // destroyed (r13 plan audit; pinned in PlanQualitySpec).
+  // Every rule returns an UNSORTED frame: callers that present the
+  // alerts sort once at the edge (the ad_* driver keys), and composed
+  // consumers (Pipeline.detectAll's union, the al_* aggregates) pay no
+  // per-branch global sort that Catalyst's EliminateSorts cannot remove
+  // from inside a union branch (r13 plan audit; pinned in PlanQualitySpec).
 
   /** Conjunctive threshold rule over raw + rolling-mean features
     * (clogged-filter analog: models.py:147 `fan_speed_pct > 70 AND
     * fan_rolling_mean_15min > 65`, rescaled to the events domain).
     * Emits alert records with metric/score/severity like models.py:152. */
   def thresholdAlerts(features: DataFrame): DataFrame =
-    thresholdAlertsUnsorted(features).orderBy("user_id", "ts_us", "event_id")
-
-  private[graft] def thresholdAlertsUnsorted(features: DataFrame): DataFrame =
     features
       .filter(col("value") > 150 && col("mean_3") > 100)
       .select(
@@ -61,12 +55,7 @@ object AnomalyRules {
     * consecutive readings"). Classic gaps-and-islands: the difference of
     * two row_numbers is constant within a run. */
   def consecutiveRuns(events: DataFrame, threshold: Double = 100.0,
-      minRun: Int = 3): DataFrame =
-    consecutiveRunsUnsorted(events, threshold, minRun)
-      .orderBy("user_id", "ts_us", "event_id")
-
-  private[graft] def consecutiveRunsUnsorted(events: DataFrame,
-      threshold: Double = 100.0, minRun: Int = 3): DataFrame = {
+      minRun: Int = 3): DataFrame = {
     val exceeds = when(col("value") > threshold, 1).otherwise(0)
     val wCond = Window.partitionBy(col("user_id"), col("exceeds"))
       .orderBy(col("ts_us"), col("event_id"))
@@ -89,12 +78,7 @@ object AnomalyRules {
     * within a trailing 12-row window (models.py:222 sign-change count).
     * The reference's skip-ahead scan is stateful; the trailing-window
     * form is its declarative, scan-parallel equivalent. */
-  def oscillation(events: DataFrame, maxChanges: Int = 8): DataFrame =
-    oscillationUnsorted(events, maxChanges)
-      .orderBy("user_id", "ts_us", "event_id")
-
-  private[graft] def oscillationUnsorted(events: DataFrame,
-      maxChanges: Int = 8): DataFrame = {
+  def oscillation(events: DataFrame, maxChanges: Int = 8): DataFrame = {
     val delta  = col("value") - lag(col("value"), 1).over(keyOrder)
     val events2 = events.withColumn("delta", delta)
     val chg = when(
@@ -117,11 +101,7 @@ object AnomalyRules {
     * (models.py:262 scaler + models.py:297 score threshold), with the
     * per-key stats computed exactly via decimal sums and joined back —
     * the stats side is tiny (one row per key) so Catalyst broadcasts it. */
-  def zscoreAlerts(events: DataFrame, cut: Double = 2.5): DataFrame =
-    zscoreAlertsUnsorted(events, cut).orderBy("user_id", "ts_us", "event_id")
-
-  private[graft] def zscoreAlertsUnsorted(events: DataFrame,
-      cut: Double = 2.5): DataFrame = {
+  def zscoreAlerts(events: DataFrame, cut: Double = 2.5): DataFrame = {
     val vdec = col("value").cast(dec)
     val stats = events
       .groupBy(col("user_id"))

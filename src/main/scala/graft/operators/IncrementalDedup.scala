@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ScopedConf
 
 /** Incremental (batch-vs-corpus) near-duplicate detection over a
   * PERSISTED MinHash signature index — the shape a production ingest
@@ -250,9 +251,8 @@ object IncrementalDedup {
     * ~250k docs × 16 bands the clamp would break the sidecar's fpp
     * promise — an 8 MB filter holding 80M keys gates nothing while the
     * JSON meta claims otherwise — so the two confs are raised to the
-    * requested parameters for exactly this aggregate's build and
-    * restored after (they only CAP sizes; raising them scoped to this
-    * action cannot affect concurrent queries' semantics). */
+    * requested parameters in a scoped session that runs only this
+    * aggregate; the caller's session never sees them. */
   private def bucketBloomBytes(sigRows: DataFrame, items: Long,
       bits: Long): Array[Byte] = {
     import org.apache.spark.sql.catalyst.expressions.Literal
@@ -264,21 +264,12 @@ object IncrementalDedup {
     val agg = bridge.column(new BloomFilterAggregate(
       bridge.expression(col("key")), Literal(items), Literal(bits))
       .toAggregateExpression())
-    val conf = sigRows.sparkSession.conf
-    val itemsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
-    val bitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
-    val prevItems = conf.getOption(itemsKey)
-    val prevBits = conf.getOption(bitsKey)
-    def restore(key: String, prev: Option[String]): Unit =
-      prev match { case Some(v) => conf.set(key, v) case None => conf.unset(key) }
-    try {
-      conf.set(itemsKey, math.max(items, 4000000L).toString)
-      conf.set(bitsKey, math.max(bits, 67108864L).toString)
-      keys.agg(agg.as("bf")).head.getAs[Array[Byte]]("bf")
-    } finally {
-      restore(itemsKey, prevItems)
-      restore(bitsKey, prevBits)
-    }
+    val scoped = ScopedConf.session(sigRows.sparkSession,
+      "spark.sql.optimizer.runtime.bloomFilter.maxNumItems" ->
+        math.max(items, 4000000L).toString,
+      "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" ->
+        math.max(bits, 67108864L).toString)
+    ScopedConf.rebind(keys, scoped).agg(agg.as("bf")).head.getAs[Array[Byte]]("bf")
   }
 
   /** Build (or rebuild) the bucket-Bloom sidecar for the CURRENT corpus
@@ -376,21 +367,22 @@ object IncrementalDedup {
     val spark = batch.sparkSession
     val filter = org.apache.spark.util.sketch.BloomFilter.readFrom(
       new java.io.ByteArrayInputStream(bytes))
-    val keep = batch.select(col("doc_id"), col("bkts")).collect().flatMap { r =>
-      val bkts = r.getSeq[Int](1)
-      val hit = bkts.iterator.zipWithIndex.exists { case (b, i) =>
+    val rows = batch.select(col("doc_id"), col("bkts")).collect()
+    val keep = rows.filter { r =>
+      r.getSeq[Int](1).iterator.zipWithIndex.exists { case (b, i) =>
         val key = new XxHash64(Seq(Literal(i), Literal(b)))
           .eval(null).asInstanceOf[Long]
         filter.mightContainLong(key)
       }
-      if (hit) Some(r.getLong(0)) else None
-    }
+    }.map(_.getLong(0)).toSet
     if (keep.isEmpty) (batch.limit(0), 0L)
     else {
       import spark.implicits._
       val keepDf = spark.createDataset(keep.toSeq).toDF("doc_id")
+      // the semi join keeps EVERY batch row whose id is kept, so a
+      // repeated doc_id counts once per row, not once per id
       (batch.join(broadcast(keepDf), Seq("doc_id"), "left_semi"),
-        keep.length.toLong)
+        rows.count(r => keep(r.getLong(0))).toLong)
     }
   }
 

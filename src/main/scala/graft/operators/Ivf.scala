@@ -308,19 +308,11 @@ object Ivf {
     * [[topKWith]] — so batch results are row-identical to per-query
     * probes (specced). Two corpus scans per action: one to extract the
     * query vectors (materialized, so the two broadcasts don't each
-    * re-run the scan) and one, cell-pruned, for the hits. */
+    * re-run the scan) and one, cell-pruned, for the hits. Unsorted:
+    * callers that present the hits order them by (q_id, cosine desc,
+    * vec_id). */
   def topKBatch(embeddings: DataFrame, centroids: Array[Array[Float]],
-      queryIds: Seq[Long], k: Int, nprobe: Int = 0): DataFrame =
-    topKBatchUnsorted(embeddings, centroids, queryIds, k, nprobe)
-      .orderBy(col("q_id"), col("cosine").desc, col("vec_id"))
-
-  /** [[topKBatch]] before its presentation sort — for consumers that
-    * re-sort or collect the (batch-bounded) result themselves
-    * (AdaptiveAnn's two-phase driver sorts the final union; sorting each
-    * phase first paid a wasted range exchange per probe, r20). */
-  private[graft] def topKBatchUnsorted(embeddings: DataFrame,
-      centroids: Array[Array[Float]], queryIds: Seq[Long], k: Int,
-      nprobe: Int = 0): DataFrame = {
+      queryIds: Seq[Long], k: Int, nprobe: Int = 0): DataFrame = {
     require(queryIds.nonEmpty, "queryIds must not be empty")
     val np = resolveNprobe(nprobe, centroids.length)
     import org.apache.spark.sql.expressions.Window

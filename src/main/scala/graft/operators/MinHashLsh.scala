@@ -270,7 +270,9 @@ object MinHashLsh {
     }
   }
 
-  /** Candidate pairs via banding + signature-agreement estimate.
+  /** Candidate pairs via banding + signature-agreement estimate,
+    * unsorted (the plan carries the banding/verify kernels, pinned in
+    * PlanQualitySpec).
     *
     * Signatures are materialized once (localCheckpoint) and feed the
     * banding AND both sides of the estimate join — without it every
@@ -278,31 +280,17 @@ object MinHashLsh {
     *
     * The r14 stage profile at sf1 (50k docs, 18.7M banded candidates,
     * 2.6M output pairs: tokenize 0.24 s, signatures 0.19 s, band join
-    * 1.27 s, estimate 0.65 s, sort +0.97 s, full 3.47 s) found the two
-    * closing costs and both are shape, not volume:
-    *   - the estimate join attached signatures to the 18.7M-row pair
-    *     stream through two SHUFFLE joins; the signature table itself is
-    *     ~1 KB/doc, so under [[maxBroadcastVerifyBytes]] it broadcasts
-    *     (same dial as the exactPairs verify) and the candidate stream
-    *     flows join→join→filter in one fused stage, never shuffling a
-    *     pair row;
-    *   - the presentation sort's range sampler re-executed the whole
-    *     join lineage for its sampling pass (the r12 tx_* / r13
-    *     contamination finding in join form); a LAZY localCheckpoint of
-    *     the thresholded output makes the sampling pass materialize the
-    *     24-byte survivor rows once and the real pass re-read them. */
+    * 1.27 s, estimate 0.65 s, sort +0.97 s, full 3.47 s) found that the
+    * estimate join attached signatures to the 18.7M-row pair stream
+    * through two SHUFFLE joins; the signature table itself is ~1 KB/doc,
+    * so under [[maxBroadcastVerifyBytes]] it broadcasts (same dial as the
+    * exactPairs verify) and the candidate stream flows join→join→filter
+    * in one fused stage, never shuffling a pair row. A caller that sorts
+    * the pairs should put a lazy localCheckpoint before the sort: the
+    * range sampler would otherwise re-execute the whole join lineage
+    * (the dd_minhash_lsh keys do). */
   def candidatePairs(documents: DataFrame, k: Int = 128, bands: Int = 8,
-      threshold: Double = 0.9, maxBucket: Int = 4096): DataFrame =
-    candidatePairsUnsorted(documents, k, bands, threshold, maxBucket)
-      .localCheckpoint(false)
-      .orderBy("doc_a", "doc_b")
-
-  /** [[candidatePairs]] before the presentation sort — the stage whose
-    * plan carries the banding/verify kernels (pinned in
-    * PlanQualitySpec; the public form's top plan shows only the sort
-    * over the checkpointed survivor rows). */
-  private[graft] def candidatePairsUnsorted(documents: DataFrame, k: Int,
-      bands: Int, threshold: Double, maxBucket: Int): DataFrame = {
+      threshold: Double = 0.9, maxBucket: Int = 4096): DataFrame = {
     // LAZY (r20): the banding guard's first action materializes the
     // signature blocks in the same job — one scheduler round-trip
     // instead of a standalone checkpoint job; all downstream readers

@@ -22,21 +22,12 @@ object Multimodal {
 
   /** Expression-level plumbing: binary payload + metadata + a stub scalar
     * feature, all engine-agnostic. The raw payload stays binary here (this
-    * is the frame `extractFeatures` consumes). Presentation-sorted; the
-    * decode/sample pipelines consume [[binaryColumnsUnsorted]] instead —
-    * their mapPartitions stage is OPAQUE to Catalyst, so a sort below it
-    * cannot be elided and would globally exchange+sort the raw payload
-    * bytes (the exact heavy-payload shuffle the §8 design rule bans)
-    * just to feed an order-insensitive consumer (r20 finding: every
-    * mm_* key paid it). */
+    * is the frame `extractFeatures` consumes). Unsorted, so payloads stay
+    * in their scan partitions: the decode/sample stages are OPAQUE to
+    * Catalyst, and a sort below them would globally exchange the raw
+    * payload bytes (the heavy-payload shuffle the §8 design rule bans);
+    * consumers sort their own narrow results. */
   def binaryColumns(documents: DataFrame): DataFrame =
-    binaryColumnsUnsorted(documents).orderBy("doc_id")
-
-  /** [[binaryColumns]] without the presentation sort — the form every
-    * decode/sample/dedup pipeline consumes: payloads stay in their scan
-    * partitions (no exchange carries media bytes), and consumers that
-    * need an output order sort their own (narrow) results. */
-  def binaryColumnsUnsorted(documents: DataFrame): DataFrame =
     documents
       .withColumn("payload", col("text").cast("binary"))
       .withColumn("n_bytes", octet_length(col("payload")).cast("long"))
@@ -50,7 +41,7 @@ object Multimodal {
     * to its md5 digest so every output column is flat and comparable —
     * payload bytes themselves never need to leave the executors. */
   def binaryColumnsChecked(documents: DataFrame): DataFrame =
-    binaryColumnsUnsorted(documents)
+    binaryColumns(documents)
       .withColumn("payload_md5", md5(col("payload")))
       .select("doc_id", "payload_md5", "n_bytes", "header_hex", "modality",
         "fake_feature")

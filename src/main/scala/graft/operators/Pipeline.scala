@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ScopedConf
 
 import graft.sources.Tables
 
@@ -69,37 +70,31 @@ object Pipeline {
     // AdaptiveSparkPlanExec reports UnknownPartitioning before execution,
     // so a checkpoint built under AQE LOSES the partitioning metadata the
     // whole scheme exists to carry (measured: every branch re-exchanged).
-    // Conf-scoped save/restore, the Tables.tableAdaptive precedent; the
-    // downstream rule queries still plan under the session's AQE setting.
-    val adaptiveBefore = spark.conf.get("spark.sql.adaptive.enabled")
-    val events =
-      try {
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        TimeSeries.base(spark, dir)
-          .repartition(col("user_id"))
-          .sortWithinPartitions("user_id", "ts_us", "event_id")
-          .localCheckpoint(false)
-      } finally spark.conf.set("spark.sql.adaptive.enabled", adaptiveBefore)
-    detectAll(events, TimeSeries.rollingFeaturesUnsorted(events))
+    // The override lives in a scoped session, never on the caller's; the
+    // re-bound checkpoint keeps its partitioning, and the downstream rule
+    // queries plan under the caller's AQE setting.
+    val noAqe = ScopedConf.session(spark, "spark.sql.adaptive.enabled" -> "false")
+    val events = ScopedConf.rebind(
+      TimeSeries.base(noAqe, dir)
+        .repartition(col("user_id"))
+        .sortWithinPartitions("user_id", "ts_us", "event_id")
+        .localCheckpoint(false), spark)
+    detectAll(events, TimeSeries.rollingFeatures(events))
   }
 
   /** All four rule detectors, unioned on the standard schema
-    * (models.py:377 runs rules + ML and concatenates). Composes the
-    * UNSORTED rule cores: each rule's public form carries a global
-    * presentation sort that EliminateSorts cannot remove from inside a
-    * union branch, so the sorted forms here cost four rangepartitioning
-    * exchanges whose order the final orderBy (or a consumer's
-    * aggregate) immediately destroys (r13 audit; the union plan's
-    * sortlessness below the top is pinned in PlanQualitySpec). */
+    * (models.py:377 runs rules + ML and concatenates). The rules return
+    * unsorted frames, so the union carries one sort, at the top (the
+    * union plan's sortlessness below it is pinned in PlanQualitySpec). */
   def detectAll(events: DataFrame, features: DataFrame): DataFrame = {
     val threshold = standardize(
-      AnomalyRules.thresholdAlertsUnsorted(features), col("score"))
+      AnomalyRules.thresholdAlerts(features), col("score"))
     val consecutive = standardize(
-      AnomalyRules.consecutiveRunsUnsorted(events), col("run_len").cast("double"))
+      AnomalyRules.consecutiveRuns(events), col("run_len").cast("double"))
     val oscillation = standardize(
-      AnomalyRules.oscillationUnsorted(events), col("n_changes").cast("double"))
+      AnomalyRules.oscillation(events), col("n_changes").cast("double"))
     val zscore = standardize(
-      AnomalyRules.zscoreAlertsUnsorted(events), col("zscore"))
+      AnomalyRules.zscoreAlerts(events), col("zscore"))
     threshold.unionByName(consecutive).unionByName(oscillation).unionByName(zscore)
       .orderBy("rule_name", "user_id", "ts_us", "event_id")
   }
@@ -126,9 +121,10 @@ object Pipeline {
 
   /** ETL entry point: events → cleaned + feature frame, persisted, with
     * the per-feature summary sidecar (pipeline_batch.py:184-191). Returns
-    * the feature frame. */
+    * the feature frame, sorted as persisted. */
   def runEtl(spark: SparkSession, dir: String, outPath: String): DataFrame = {
     val features = TimeSeries.rollingFeatures(TimeSeries.base(spark, dir))
+      .orderBy("user_id", "ts_us", "event_id")
     features.write.mode("overwrite").parquet(outPath)
     featureSummary(features,
       Seq("value", "mean_3", "std_3", "mean_12", "std_12"))

@@ -117,15 +117,8 @@ object TimeSeries {
       lit(0.0))
 
   /** Rolling features: trailing 3-row and 12-row mean/std per key
-    * (reference: pipeline_batch.py:103-127 rolling 15-min/60-min stats). */
-  def rollingFeatures(events: DataFrame): DataFrame =
-    rollingFeaturesUnsorted(events).orderBy("user_id", "ts_us", "event_id")
-
-  /** [[rollingFeatures]] without the presentation sort — for consumers
-    * that aggregate, re-sort or materialize the frame themselves (the
-    * optimizer elides the sort under aggregation, but an eager
-    * checkpoint/write would pay a useless global exchange+sort for rows
-    * whose order the consumer discards).
+    * (reference: pipeline_batch.py:103-127 rolling 15-min/60-min stats).
+    * Unsorted: consumers that present the frame sort it themselves.
     *
     * r20 (optimization round): every DISTINCT (aggregate, frame) pair is
     * computed exactly once in ONE projection, so Catalyst plans a single
@@ -137,7 +130,7 @@ object TimeSeries {
     * frame-adds + 60 count-adds per row where 30 + 15 suffice. The
     * mean/std expressions consume the shared aggregates through the
     * identical IEEE op chain, so output is bit-identical (oracle-gated). */
-  def rollingFeaturesUnsorted(events: DataFrame): DataFrame = {
+  def rollingFeatures(events: DataFrame): DataFrame = {
     val vdec = col("value").cast(dec)
     val w3 = keyOrder.rowsBetween(-2, Window.currentRow)
     val w12 = keyOrder.rowsBetween(-11, Window.currentRow)

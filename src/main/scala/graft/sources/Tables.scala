@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ScopedConf
 import org.apache.spark.sql.types.{ArrayType, BinaryType, ByteType, DataType,
   DateType, DoubleType, FloatType, IntegerType, LongType, ShortType,
   StringType, TimestampNTZType, TimestampType}
@@ -127,30 +128,19 @@ object Tables {
   /** [[table]] with the NANOS fallback: a file whose timestamp column
     * carries the TIMESTAMP(NANOS) annotation is unreadable by Spark
     * outright ([ILLEGAL_PARQUET_TYPE]); retry as nanos-as-long under a
-    * CLONED session (same SparkContext, own SQLConf copy), so the legacy
-    * conf is pinned for exactly this DataFrame's lifetime and never
-    * leaks into — or races with — other reads on the shared session.
-    * (Restoring the conf after building the lazy frame would not work:
-    * the parquet scan captures its hadoop conf at plan time, after this
-    * method returns.) Any readable file never touches conf anywhere. */
+    * ScopedConf session (same SparkContext, a copy of the caller's
+    * conf), so the legacy conf is pinned for exactly this DataFrame's
+    * lifetime and never leaks into — or races with — other reads on the
+    * shared session. The frame stays bound to that session: the parquet
+    * scan captures its hadoop conf at plan time, after this method
+    * returns. Any readable file never touches conf anywhere. */
   def tableAdaptive(spark: SparkSession, dir: String, name: String): DataFrame =
     try table(spark, dir, name)
     catch {
       case e: Exception if e.getMessage != null &&
           e.getMessage.contains("PARQUET_TYPE") =>
-        val scoped = spark.newSession()
-        // newSession() starts from the INITIAL conf — replay the caller's
-        // runtime conf (session timezone, AQE/shuffle settings, case
-        // sensitivity, …) so the fallback read plans under the same
-        // SQLConf as sibling frames; only then pin the nanos flag.
-        // Non-runtime (static/core) keys reject sets — skip them.
-        spark.conf.getAll.foreach { case (k, v) =>
-          if (scoped.conf.getOption(k) != Some(v))
-            try scoped.conf.set(k, v)
-            catch { case _: org.apache.spark.sql.AnalysisException => () }
-        }
-        scoped.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        table(scoped, dir, name)
+        table(ScopedConf.session(spark,
+          "spark.sql.legacy.parquet.nanosAsLong" -> "true"), dir, name)
     }
 
   /** Data contract for the fact tables' date-valued columns

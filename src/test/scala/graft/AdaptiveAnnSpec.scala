@@ -112,6 +112,7 @@ class AdaptiveAnnSpec extends AnyFunSuite {
     val autoP = AdaptiveAnn.ivfTopKBatchAuto(corpusP, cents, qids, 10)
       .collect().map(_.toSeq)
     val defaultP = Ivf.topKBatch(corpusP, cents, qids, 10)
+      .orderBy(col("q_id"), col("cosine").desc, col("vec_id"))
       .collect().map(_.toSeq)
     assert(autoP.toSeq === defaultP.toSeq)
 
@@ -120,7 +121,9 @@ class AdaptiveAnnSpec extends AnyFunSuite {
     val autoB = AdaptiveAnn.ivfTopKBatchAuto(corpusB, centsB, qids, 10)
       .collect().map(_.toSeq)
     val wideB = Ivf.topKBatch(corpusB, centsB, qids, 10,
-      nprobe = Ivf.wideNprobe(8)).collect().map(_.toSeq)
+      nprobe = Ivf.wideNprobe(8))
+      .orderBy(col("q_id"), col("cosine").desc, col("vec_id"))
+      .collect().map(_.toSeq)
     assert(autoB.toSeq === wideB.toSeq)
   }
 

@@ -275,6 +275,7 @@ class ClusterIvfSpec extends AnyFunSuite {
     val cents = graft.operators.Ivf.kmeansCentroids(emb, 16, iters = 4)
     val qids = Seq(0L, 7L, 31L)
     val batch = graft.operators.Ivf.topKBatch(emb, cents, qids, k = 10, nprobe = 3)
+      .orderBy(col("q_id"), col("cosine").desc, col("vec_id"))
       .collect()
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"),
         r.getAs[Double]("cosine")))

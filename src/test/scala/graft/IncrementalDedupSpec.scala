@@ -63,6 +63,32 @@ class IncrementalDedupSpec extends AnyFunSuite {
       s"only $flagged/20 copies of appended docs flagged — append-merge broke the gate")
   }
 
+  test("driver gate counts every kept row when a doc_id repeats") {
+    // two batch rows share doc_id 900001: one copies a corpus doc (its
+    // band buckets are in the sidecar), one is novel. The semi join keeps
+    // BOTH rows of the kept id, so the count handed on as knownBatchN
+    // must be 2 for that id, not 1
+    import spark.implicits._
+    val docs = Tables.documents(spark, sf)
+    val path = tmp()
+    IncrementalDedup.saveSignatures(docs, path)
+    IncrementalDedup.writeBucketBloom(spark, path, fpp = 1e-5)
+    val idx = IncrementalDedup.openSignatures(spark, path)
+    val bloom = IncrementalDedup.readBucketBloom(spark, path).get._1
+    val copied = docs.select("text").head.getString(0)
+    val batch = IncrementalDedup.signed(Seq(
+      (900001L, copied),
+      (900001L, "quartz novel vocabulary never seen zxqv"),
+      (900002L, "another unshared sentence about nothing qqzz"))
+      .toDF("doc_id", "text"), idx.k, idx.bands).localCheckpoint(true)
+    // premise: exactly one row of the repeated id passes the gate
+    assert(batch.filter(IncrementalDedup.bucketBloomGate(bloom))
+      .select("doc_id").collect().map(_.getLong(0)).toSeq === Seq(900001L))
+    val (gated, n) = IncrementalDedup.driverGate(batch, bloom)
+    assert(n === gated.count())
+    assert(n === 2L)
+  }
+
   test("bucket-Bloom sidecar is not clamped by Spark's runtime-filter conf maxima") {
     // BloomFilterAggregate Math.min-clamps its parameters against
     // spark.sql.optimizer.runtime.bloomFilter.maxNumItems/maxNumBits

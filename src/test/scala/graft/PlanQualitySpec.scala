@@ -97,15 +97,14 @@ class PlanQualitySpec extends AnyFunSuite {
     // the estimate stage carries the match-count kernel and broadcasts
     // the ~1KB/doc signature payload (r14: the pair stream never
     // shuffles into the estimate join under the broadcast budget)
-    val pMh = plan(MinHashLsh.candidatePairsUnsorted(
-      Tables.documents(spark, sf), 128, 8, 0.9, 4096))
+    val pMh = plan(MinHashLsh.candidatePairs(Tables.documents(spark, sf)))
     assert(pMh.contains("long_array_match_count"), pMh)
     assert(pMh.contains("BroadcastHashJoin"), pMh)
     assert(!pMh.contains("SortMergeJoin"), pMh)
-    // the public form's sort reads the CHECKPOINTED survivor rows, so
+    // the driver key's sort reads the CHECKPOINTED survivor rows, so
     // the range sampler cannot re-execute the join lineage (the r14
     // dd_minhash_lsh profile fix)
-    val pPub = plan(MinHashLsh.candidatePairs(Tables.documents(spark, sf)))
+    val pPub = plan(SparkEntry.queries("dd_minhash_lsh")(spark, sf))
     assert(pPub.contains("ExistingRDD"), pPub)
     assert(!pPub.contains("long_array_match_count"), pPub)
     // the density-capped dial (r16): same verify kernels, and the cap
@@ -303,6 +302,16 @@ class PlanQualitySpec extends AnyFunSuite {
     val shared = Pipeline.detectAllShared(spark, sf)
     assert(shared.exceptAll(unshared).isEmpty &&
       unshared.exceptAll(shared).isEmpty)
+  }
+
+  test("the re-bound detector checkpoint keeps its user_id partitioning") {
+    // detectAllShared builds its checkpoint in a scoped session (AQE off)
+    // and re-binds it to the caller's session. If the re-bound frame lost
+    // the checkpoint's outputPartitioning, the rule branches would
+    // re-exchange on user_id above it
+    val p = plan(Pipeline.detectAllShared(spark, sf))
+    val userEx = "Exchange hashpartitioning\\(user_id".r.findAllIn(p).length
+    assert(userEx === 0, s"$userEx user_id exchanges above the checkpoint:\n$p")
   }
 
   test("al_summary_top rides the shared detector scan and a heap top-10, not a full sort") {

@@ -479,4 +479,20 @@ class ScalePathSpec extends AnyFunSuite {
     assert(alerts.count() > 0)
     assert(alerts.filter(col("value") <= 150).count() === 0)
   }
+
+  test("a lost localCheckpoint block fails the query loudly instead of recomputing") {
+    // Spark truncates a materialized local checkpoint's lineage, so a
+    // block lost with its executor cannot be rebuilt: the read must fail
+    // with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND rather than return partial
+    // rows (SURVEY §5)
+    val df = spark.range(0, 1000, 1, 4).toDF("id").localCheckpoint(false)
+    assert(df.count() === 1000L)
+    val rdd = df.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.get
+    (0 until rdd.getNumPartitions).foreach(p => org.apache.spark.SparkEnv.get
+      .blockManager.removeBlock(org.apache.spark.storage.RDDBlockId(rdd.id, p)))
+    val e = intercept[org.apache.spark.SparkException](df.collect())
+    assert(e.getMessage.contains("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"), e.getMessage)
+  }
 }
